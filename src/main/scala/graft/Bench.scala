@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — runs every `SparkEntry.queries` entry against
@@ -36,15 +38,9 @@ object Bench {
     val loadStart = BenchUtil.loadAvg1m() // before ANY work — see BenchUtil
     val ticksStart = BenchUtil.cpuTicks()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.build(cpus,
       // Round 14 (verdict item 1): ContextCleaner reclaims broadcasts /
       // RDDs only when a GC collects their weak refs, and its periodic
       // GC defaults to 30 MIN — an ~8 min fleet run never gets one, so
@@ -54,9 +50,7 @@ object Bench {
       // block 2.9× slow in BOTH separated passes while canary/steal
       // stayed clean — allocation-rate-dependent, so 8 cores spread it
       // thin). Steady 45 s cleanup keeps the heap level instead.
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.cleaner.periodicGC.interval" -> "45s")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // A typo'd name must fail loudly, not run zero queries and print a
@@ -69,12 +63,7 @@ object Bench {
     val selected = SparkEntry.queries.toSeq
       .filter { case (k, _) => only.forall(_.contains(k)) }
     // Fixture setup out of the timed path (and out of query builders).
-    queries.ClinicalQueries.fixturePath
-    sources.DicomFixtures.ensure()
-    sources.DicomNearDupFixtures.ensure()
-    sources.WavFixtures.ensure()
-    sources.VideoFixtures.ensure()
-    try Tables.documentsSpread(spark, sfDir) catch { case _: Throwable => () }
+    GraftSession.prepareFixtures(spark, sfDir)
     // Warm-up pass at the smallest SF: compiles every query's codegen
     // units and JITs the hot paths, so the timed pass measures the
     // engine rather than first-call classloading. Costs seconds; the
@@ -83,7 +72,7 @@ object Bench {
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       selected.foreach { case (_, fn) =>
         try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
     }
     // The first timed query otherwise absorbs the warm-up garbage (one
@@ -92,7 +81,7 @@ object Bench {
     val ordered = selected.sortBy(_._1)
     ordered.headOption.foreach { case (_, fn) =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     System.gc()
 
@@ -106,7 +95,7 @@ object Bench {
       val t0 = System.nanoTime()
       val err =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           Some(Option(e.getMessage).getOrElse(e.getClass.getName))
         }
       val sec = (System.nanoTime() - t0) / 1e9
@@ -175,12 +164,7 @@ object Bench {
     }
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    val errs = results.collect { case (k, _, Some(m)) => "\"" + k + "\":" + jstr(m.take(200)) }
+    val errs = results.collect { case (k, _, Some(m)) => "\"" + k + "\":" + Json.str(m.take(200)) }
       .mkString("{", ",", "}")
     val total = results.map { case (_, v, _) => math.abs(v) }.sum
     val canarySpread =
@@ -213,7 +197,7 @@ object Bench {
     // a quiet host's 390 s for identical reps).
     val stealFrac = BenchUtil.stealFrac(ticksStart, BenchUtil.cpuTicks())
     val spreadTrip = overFrac > 0.25
-    val loadTrip = BenchUtil.loadContended(loadStart, cpus.toInt)
+    val loadTrip = BenchUtil.loadContended(loadStart, cpus)
     val stealTrip = stealFrac > 0.05
     val contended = spreadTrip || loadTrip || stealTrip
     val contendedBy =
@@ -350,7 +334,7 @@ object Bench {
       } else outFileRequested
     }
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
     }
     spark.stop()
@@ -371,7 +355,7 @@ object Bench {
         f""""steal_frac":$stealFrac%.4f,""" + regimeField +
         s""""contended":$contended,""" +
         s""""contended_by":${contendedBy.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""queries_truncated":true,"queries_full":${jstr(outFile)},"queries":{"""
+        s""""queries_truncated":true,"queries_full":${Json.str(outFile)},"queries":{"""
     val slowest = results.sortBy { case (_, v, _) => -math.abs(v) }
       .iterator.map { case (k, v, _) => f""""$k":$v%.3f""" }
     val budget = 1600 - compactHead.length - 2 // closing "}}"

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Shared bench plumbing: host-load capture and temp cleanup.
   *
   * Load capture is round-9 verdict item 3: the canary-spread gate
@@ -19,7 +21,7 @@ object BenchUtil {
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")))
         .trim.split("\\s+")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   /** Pre-run load above this fraction of the core count flags the run
     * contended. 25% of cores idle-before-start is far above any
@@ -50,7 +52,7 @@ object BenchUtil {
       val total = cpu.sum
       val idle = cpu(3) + (if (cpu.length > 4) cpu(4) else 0L)
       (total - idle - steal, steal, total)
-    } catch { case _: Throwable => (0L, 0L, 0L) }
+    } catch { case NonFatal(_) => (0L, 0L, 0L) }
 
   /** Steal fraction of the elapsed interval between two cpuTicks()
     * samples: stolen ticks / total ticks. Above ~0.05 the run lost a

@@ -1,24 +1,12 @@
 package graft
-import java.nio.file.{Files, Paths}
 /** Writes `SparkEntry.oracleSql` as `<outDir>/oracle_sql.json` WITHOUT
   * re-running any query — for twin-SQL-only edits (e.g. MATERIALIZED
   * hints), the already-dumped Verify parquet stays valid and only the
-  * oracle side needs refreshing. Same JSON escaping as Verify. */
+  * oracle side needs refreshing. Same writer as Verify. */
 object DumpOracle {
   def main(args: Array[String]): Unit = {
     val Array(outDir) = args
     new java.io.File(outDir).mkdirs()
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.writeOracleSql(outDir, _ => true)
   }
 }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for NAMED queries to files —
   * the per-round optimization evidence trail (plans/r13/<q>_before.txt
   * / _after.txt; the judge checks plan claims against these).
@@ -22,25 +20,8 @@ object PlanDump {
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.01"
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    queries.ClinicalQueries.fixturePath
-    sources.DicomFixtures.ensure()
-    sources.DicomNearDupFixtures.ensure()
-    sources.WavFixtures.ensure()
-    sources.VideoFixtures.ensure()
-    // NonFatal only (round-13 advice): swallowing OOM/fatal errors here
-    // could mask a broken sf dir and ship misleading plan artifacts.
-    try Tables.documentsSpread(spark, sfDir)
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[plandump] documentsSpread warm-up failed: $e")
-    }
+    val spark = GraftSession.build()
+    GraftSession.prepareFixtures(spark, sfDir)
     Files.createDirectories(outDir)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

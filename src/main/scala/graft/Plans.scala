@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for the flagship queries to
   * PLANS.md — the committed record of the plan-audit discipline (every
   * operator's plan is reviewed for pushdown, broadcast choice, codegen
@@ -59,16 +57,8 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    queries.ClinicalQueries.fixturePath
-    sources.DicomFixtures.ensure()
+    val spark = GraftSession.build()
+    GraftSession.prepareFixtures(spark, sfDir)
     val sb = new StringBuilder
     sb.append("# PLANS — flagship physical plans (generated by `graft.Plans`)\n\n")
     sb.append(s"Source: `$sfDir`. Regenerate: `sbt \"runMain graft.Plans $sfDir\"`.\n")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bench-only corpus replicator: writes an N× copy of a driver test-data
@@ -23,19 +23,10 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dest, copiesS) = args
     val copies = copiesS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS): read as raw int64 nanos
-      // (replicas keep the value; Tables.events floor-converts either
-      // physical type the same way).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // events.ts is parquet TIMESTAMP(NANOS): read as raw int64 nanos
+    // (replicas keep the value; Tables.events floor-converts either
+    // physical type the same way).
+    val spark = GraftSession.build("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     // Shift stride per keyspace: one power of ten above the max key so
     // replica key ranges never collide and stay human-readable.

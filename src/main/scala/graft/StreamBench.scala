@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -58,18 +58,11 @@ object StreamBench {
     val loadStart = BenchUtil.loadAvg1m() // before ANY work — see BenchUtil
     val ticksStart = BenchUtil.cpuTicks()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/scale10x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.build(cpus,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val path = s"$dir/events.parquet"
@@ -285,19 +278,17 @@ object StreamBench {
         f""""saturation":{"points":$ndPtsJson,"rows_per_sec":${ndPts.last._2}%.0f,""" +
         s""""plateau":$ndPlateau,"state_bytes":${ndPts.last._4}}},"""
     }
-    def jstr(x: String): String =
-      x.replace("\\", "\\\\").replace("\"", "\\\"")
     val loadEnd = BenchUtil.loadAvg1m()
     val stealFrac = BenchUtil.stealFrac(ticksStart, BenchUtil.cpuTicks())
     val contended =
-      BenchUtil.loadContended(loadStart, cpus.toInt) || stealFrac > 0.05
+      BenchUtil.loadContended(loadStart, cpus) || stealFrac > 0.05
     println(s"""{"metric":"stream_throughput","rows":$nRows,""" +
       s""""files":$nFiles,"per_trigger":$perTrigger,""" +
       s""""pipelines":{$paced},"pipelines_single_batch":{$single},""" +
       s""""saturation":{$saturation},$neardupJson""" +
       f""""loadavg":{"start":$loadStart%.2f,"end":$loadEnd%.2f},""" +
       f""""steal_frac":$stealFrac%.4f,""" +
-      s""""contended":$contended,"dir":"${jstr(dir)}"}""")
+      s""""contended":$contended,"dir":${Json.str(dir)}}""")
     spark.stop()
     tmpDirs.foreach(d => BenchUtil.deleteRecursively(new java.io.File(d)))
   }

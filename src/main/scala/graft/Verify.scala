@@ -1,28 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     // Fixture setup (one-time driver-side source acquisition) happens
     // here, not inside any query builder.
-    queries.ClinicalQueries.fixturePath
-    sources.DicomFixtures.ensure()
-    sources.DicomNearDupFixtures.ensure()
-    sources.WavFixtures.ensure()
-    sources.VideoFixtures.ensure()
+    GraftSession.prepareFixtures(spark, sfDir)
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the dump (single-query scale
     // spot-checks, same contract as Bench); unset = full run.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -37,7 +25,7 @@ object Verify {
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // Remove any stale output from a previous run: a failed query
         // must fail the compare, not silently pass on old results.
@@ -48,22 +36,16 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, k => only.forall(_.contains(k)))
     spark.stop()
+  }
+
+  /** `<outDir>/oracle_sql.json`: the DuckDB twin of every query `keep`
+    * accepts, one `"name": "sql"` member each. */
+  def writeOracleSql(outDir: String, keep: String => Boolean): Unit = {
+    val json = SparkEntry.oracleSql
+      .filter { case (k, _) => keep(k) }
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 }

@@ -18,9 +18,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * that earns its place on scan pruning
   * ([[SimplifyCaseWhenPredicates]]: filters over `when(p, v)`-derived
   * columns become parquet-pushable base-column predicates — found by
-  * PruneAudit, round 10). All engine session builders (Verify, Bench,
-  * StreamBench, the audits, SparkTestBase) register this, so the gated
-  * results and the benched plans are the extension-enabled ones.
+  * the plan audit, round 10). Every session is built by
+  * `graft.GraftSession` (all mains and SparkTestBase), which injects
+  * this, so the gated results and the benched plans are the
+  * extension-enabled ones.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.BooleanType
   * null-keeping semantics, `/root/reference/src/generate_mapping.py`
   * mask-derived columns) — plans as a filter on
   * `CASE WHEN p THEN v END`, which the parquet source cannot translate,
-  * so the scan reads every row group (PruneAudit's UNPUSHED class). For
+  * so the scan reads every row group (PlanAudit's UNPUSHED class). For
   * a top-level FILTER conjunct the CASE is removable:
   *
   *   CASE WHEN p THEN q [ELSE false|null] END   ≡ p AND q
@@ -45,7 +45,7 @@ import org.apache.spark.sql.types.BooleanType
   * IsNotNull on the base column in the same fixed-point batch.
   * Registered via [[GraftExtensions]]; pinned by
   * SimplifyCaseWhenPredicatesSpec (plan-level pushdown assertion +
-  * null-edge result equivalence with the rule on vs off).
+  * exact rows on the null edges).
   */
 object SimplifyCaseWhenPredicates extends Rule[LogicalPlan]
     with PredicateHelper {
@@ -97,18 +97,11 @@ object SimplifyCaseWhenPredicates extends Rule[LogicalPlan]
     case other => other
   }
 
-  /** A/B mode switch (AbDriftRule): `pruned` (production), `blanket`
-    * (the round-10 traversal, kept as a measurement fixture), `off`.
-    * Session-settable at runtime so the three forms alternate inside
-    * one warmed JVM — the AbHarness protocol. */
-  val ModeConf = "spark.graft.simplifyCaseWhenMode"
-
-  private val rewriteFilter: PartialFunction[LogicalPlan, LogicalPlan] = {
-    case f @ Filter(cond, child) =>
-      val conjuncts = splitConjunctivePredicates(cond)
-      val rewritten = conjuncts.map(rewriteConjunct)
-      if (rewritten == conjuncts) f
-      else Filter(rewritten.reduceLeft(And), child)
+  private def rewriteFilter(f: Filter): LogicalPlan = {
+    val conjuncts = splitConjunctivePredicates(f.condition)
+    val rewritten = conjuncts.map(rewriteConjunct)
+    if (rewritten == conjuncts) f
+    else Filter(rewritten.reduceLeft(And), f.child)
   }
 
   /** Tree-pattern-pruned traversal (round 11): this rule sits in the
@@ -119,24 +112,18 @@ object SimplifyCaseWhenPredicates extends Rule[LogicalPlan]
     * the 99% of Filters that carry no CASE, and the round-10 verdict's
     * "family-shaped sf0.1 drift" (graph fixed-point + shingle-Jaccard,
     * +20–40% while the fleet median stayed flat) is exactly the
-    * biggest-logical-plan family — dispositioned by AbDriftRule and
-    * SCALE.md round 11. The pruning bits skip entire subtrees whose
-    * pattern sets lack FILTER+CASE_WHEN, and the per-node guard skips
-    * conjunct-splitting on CASE-free conditions.
+    * biggest-logical-plan family — dispositioned by the same-JVM A/B
+    * added in 8927d0f and SCALE.md round 11. The pruning bits skip
+    * entire subtrees whose pattern sets lack FILTER+CASE_WHEN, and the
+    * per-node guard skips conjunct-splitting on CASE-free conditions.
     * `transformDownWithSubqueriesAndPruning` also reaches Filter nodes
     * inside scalar/IN/EXISTS subqueries (round-10 advice: those kept
     * the unpushed CASE predicate). */
   override def apply(plan: LogicalPlan): LogicalPlan =
-    conf.getConfString(ModeConf, "pruned") match {
-      case "off" => plan
-      case "blanket" => plan.transform(rewriteFilter)
-      case _ =>
-        plan.transformDownWithSubqueriesAndPruning(
-          t => t.containsPattern(TreePattern.FILTER) &&
-            t.containsPattern(TreePattern.CASE_WHEN)) {
-          case f @ Filter(cond, child)
-              if cond.containsPattern(TreePattern.CASE_WHEN) =>
-            rewriteFilter(f)
-        }
+    plan.transformDownWithSubqueriesAndPruning(
+      t => t.containsPattern(TreePattern.FILTER) &&
+        t.containsPattern(TreePattern.CASE_WHEN)) {
+      case f: Filter if f.condition.containsPattern(TreePattern.CASE_WHEN) =>
+        rewriteFilter(f)
     }
 }

@@ -16,16 +16,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Ea1141Main {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("ea1141")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     try run(spark, args) finally spark.stop()
   }
 

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** The same-JVM alternating A/B protocol, extracted (round-9 verdict
-  * item: `AbBucketPairs` and `AbCosinePairs` were two copies of it and
-  * the protocol now underwrites every perf claim — one parameterized
-  * harness stops the next A/B from becoming a third).
+/** The same-JVM alternating A/B protocol — the one A/B harness (round-9
+  * verdict item: two A/B mains had grown their own copies of it). An A/B
+  * main builds its session with `graft.GraftSession.build()` and hands
+  * its forms to [[run]]; once the A/B is settled the main and its losing
+  * form are deleted and the commit that added them keeps the record.
   *
   * Why this instrument and not fresh-JVM solo runs: cross-session
   * singles of queries in the tens-of-seconds class swing ±20-40% with
@@ -16,21 +17,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exactly — an A/B between forms that disagree on the result is void.
   */
 object AbHarness {
-
-  /** One SparkSession shape for every A/B main (AQE on, 32 threads). */
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** Count-check then alternate `reps` timed materializations of each
     * form (noop sink — full column materialization). `tag` prefixes the

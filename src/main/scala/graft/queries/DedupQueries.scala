@@ -172,7 +172,7 @@ object DedupQueries {
     // buckets are rare. Kept pair set identical (MinKPairsSpec pins
     // the kernel; doc_id is unique within a bucket), twins unchanged.
     //
-    // Measured (AbBucketPairs, same-JVM alternating A/B, 32 threads):
+    // Measured (same-JVM alternating A/B added in b1fbfe9, 32 threads):
     // on the flat 100x corpus (no bucket near the cap) the forms are
     // equivalent (window 1.4-2.0 s vs minkby 1.7-2.9 s of a ~6 s
     // query — the aggregate's interpreted update path costs slightly

@@ -250,7 +250,7 @@ object EventQueries {
     // NON-NEGATIVE int64 id (10¹⁹ > Long.MaxValue; max value ~1.8e34
     // fits DECIMAL(38)), and fixed-precision decimals ARE mutable
     // buffer types — the agg hash-aggregates. Priced on the 100×
-    // replica (AbSortAgg, same-JVM alternating, argmin agreement
+    // replica (A/B added in f2b0c62, same-JVM alternating, argmin agreement
     // verified exact): 1.0 → 0.6 s best-of, faster on every rep.
     //
     // DOMAIN CONTRACT (round-10 advice): the pack is order-isomorphic
@@ -577,7 +577,7 @@ object EventQueries {
       // ScanAudit round-10 disposition: events x4 is the measured
       // optimum. The checkpoint-btotals-and-roll-up form (tot/mx as
       // rollups of a localCheckpoint'd per-bucket frame, x4 → x2) was
-      // A/B'd at 100× (AbScanFix cusum, 3 alternating reps) and LOST
+      // A/B'd at 100× (2152177's cusum A/B, 3 alternating reps) and LOST
       // best-of 5.3 vs 4.7 s — the eager checkpoint job costs more
       // than the two page-cached aggregate re-scans it removes (the
       // q_mad_outliers lesson again; unlike q_group_p90's 4 re-runs of

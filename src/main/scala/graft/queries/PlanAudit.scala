@@ -1,23 +1,20 @@
 package graft.queries
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
-/** The audit trilogy as a REGRESSION GATE (round-10 verdict item 2).
+/** The plan-shape REGRESSION GATE (round-10 verdict item 2).
   *
-  * [[ScanAudit]]/[[PruneAudit]]/[[CodegenAudit]] are verbose triage
-  * diagnostics — run once in round 10, their 82 flagged rows
-  * dispositioned by hand in SCALE.md. Nothing re-ran them, so a future
-  * edit could silently re-introduce a duplicate scan, an unpushed
-  * filter, or a sort-agg fallback the round paid to remove. This main
-  * closes that hole: ONE planning pass over every registered query (at
-  * sf0.001, AQE off so `collect` sees the physical tree) computes a
-  * canonical one-line disposition per query —
+  * ONE planning pass over every registered query (at sf0.001, AQE off
+  * so `collect` sees the physical tree) computes a canonical one-line
+  * disposition per query —
   *
   *   <name> scans=[tbl xN,…] prune=[tbl:FLAG,…] codegen=[FLAG,…]
   *
@@ -31,14 +28,24 @@ import graft.SparkEntry
   * is recorded by re-running with `--write` and reviewing the git diff
   * of the expected file like any other code change.
   *
-  * Flag semantics are the trilogy's (see each main's scaladoc):
-  * duplicate FileScans per source table; FULL-WIDTH / UNPUSHED /
-  * WIDE-TEXT per scan; FALLBACK-EXPR / SORT-AGG / CARTESIAN / NO-WSCG
-  * per plan. Counts use sf0.001 plans — flag SETS are sf-stable
-  * because they are plan-shape, not data-size, properties (broadcast
-  * thresholds are not crossed between sf0.001 and sf0.01 for any
-  * registered query; re-verified when the expected file was first
-  * written).
+  * Flags (the three dimensions were once separate diagnostics, the
+  * ScanAudit/PruneAudit/CodegenAudit names the expected-file header
+  * still uses):
+  *   - `tbl xN`: N > 1 FileScans of one source table — legitimate for a
+  *     self-join, a smell when exchange reuse failed to merge branches.
+  *   - FULL-WIDTH: a scan reads every column of a table with >= 5 columns.
+  *   - UNPUSHED: a scan has data filters but the reader got no pushed filter.
+  *   - WIDE-TEXT: a scan reads `documents.text`, the corpus-mass column.
+  *   - FALLBACK-EXPR: an interpreted CodegenFallback expression in a Project/Filter.
+  *   - SORT-AGG: a SortAggregateExec — the planner could not hash-aggregate.
+  *   - CARTESIAN: a CartesianProductExec — a keyless n×m expansion.
+  *   - UNPART-WINDOW: a window with no partitioning, run as one task.
+  *   - NO-WSCG: no WholeStageCodegen span anywhere in the plan.
+  *
+  * Counts use sf0.001 plans — flag SETS are sf-stable because they are
+  * plan-shape, not data-size, properties (broadcast thresholds are not
+  * crossed between sf0.001 and sf0.01 for any registered query;
+  * re-verified when the expected file was first written).
   *
   * Run: `runMain graft.queries.PlanAudit [--write] [sfDir]`.
   */
@@ -49,7 +56,7 @@ object PlanAudit {
 
   /** Canonical disposition line for one query's physical plan. */
   private[queries] def dispositionLine(name: String, plan: SparkPlan): String = {
-    // ScanAudit dimension: FileScan count per source table (>1 = dup).
+    // scans dimension: FileScan count per source table (>1 = dup).
     val scanLines = plan.toString.linesIterator
       .filter(_.contains("FileScan")).toSeq
     val dups = scanLines
@@ -58,7 +65,7 @@ object PlanAudit {
       .toSeq.sortBy(_._1)
       .map { case (t, n) => s"$t x$n" }
 
-    // PruneAudit dimension: per-scan pruning/pushdown flags.
+    // prune dimension: per-scan pruning/pushdown flags.
     val scans = plan.collectWithSubqueries { case f: FileSourceScanExec => f }
     val pruneFlags = scans.flatMap { f =>
       val paths = f.relation.location.rootPaths.map(_.toString).mkString(",")
@@ -76,7 +83,7 @@ object PlanAudit {
       ).flatten
     }.distinct.sorted
 
-    // CodegenAudit dimension: Tungsten fast-path flags.
+    // codegen dimension: Tungsten fast-path flags.
     val all: Seq[SparkPlan] = plan.collectWithSubqueries { case p => p }
     val fallbacks = all.flatMap {
       case p @ (_: ProjectExec | _: FilterExec) =>
@@ -125,7 +132,7 @@ object PlanAudit {
       catch {
         // a query that cannot even PLAN must fail the gate loudly —
         // record it as a line that will never match the expected file
-        case e: Throwable =>
+        case NonFatal(e) =>
           s"$name PLAN-FAILED: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}"
       }
     }
@@ -134,18 +141,11 @@ object PlanAudit {
     val write = args.contains("--write")
     val sfDir = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    ClinicalQueries.fixturePath
-    graft.sources.DicomFixtures.ensure()
-    try graft.Tables.documentsSpread(spark, sfDir) catch { case _: Throwable => () }
+    // AQE off: it wraps the physical plan in AdaptiveSparkPlanExec,
+    // whose inner plan `collect` does not traverse; the audit only PLANS
+    // (never runs) the queries, so this just exposes the tree.
+    val spark = GraftSession.build(4, "spark.sql.adaptive.enabled" -> "false")
+    GraftSession.prepareFixtures(spark, sfDir)
 
     val actual = auditLines(spark, sfDir)
     spark.stop()

@@ -54,7 +54,8 @@ object SimilarityQueries {
     * so one degenerate bucket costs O(bucket·CAP) not O(bucket²).
     * Mirrored exactly in the DuckDB twins, so parity holds whether or
     * not the cap triggers (at sf0.01 it does not; at sf0.1 the 16-bucket
-    * tables exceed it and both engines cap identically). */
+    * tables exceed it and both engines cap identically). The value rests
+    * on the recall-vs-cap curve measured by the A/B added in 8927d0f. */
   private[queries] val CAND_CAP = 200
 
   /** cos(a, b) in double precision, sequential element order — the
@@ -101,23 +102,21 @@ object SimilarityQueries {
     e.select(col("vec_id"), explode(array(buckets: _*)).as("bk"))
   }
 
-  /** Distinct directed candidate pairs (id_a, id_b), id_a ≠ id_b, from
-    * the capped multi-table LSH index: every member probes its buckets;
-    * only the CAND_CAP smallest-id members of each bucket serve on the
-    * index side. Shuffle carries (bucket, id) pairs only — never the
-    * embedding arrays. */
-  /** Directed candidate pairs WITH possible cross-table duplicates (a
-    * pair repeats once per LSH table that buckets it together, ≤
-    * LSH_TABLES times) — for consumers whose next step absorbs
-    * duplicates anyway (an aggregate, or a coarser distinct), saving
-    * the full-frame distinct exchange that [[lshCandidates]] pays. */
-  private def lshCandidatesRaw(e: DataFrame, cap: Int = CAND_CAP): DataFrame = {
+  /** Directed candidate pairs (id_a, id_b), id_a ≠ id_b, from the
+    * capped multi-table LSH index: every member probes its buckets; only
+    * the CAND_CAP smallest-id members of each bucket serve on the index
+    * side. Shuffle carries (bucket, id) pairs only — never the embedding
+    * arrays. A pair repeats once per LSH table that buckets it together
+    * (≤ LSH_TABLES times) — for consumers whose next step absorbs
+    * duplicates anyway (an aggregate, or a coarser distinct), saving the
+    * full-frame distinct exchange that [[lshCandidates]] pays. */
+  private[queries] def lshCandidatesRaw(e: DataFrame): DataFrame = {
     val banded = lshBanded(e)
     val wB = org.apache.spark.sql.expressions.Window
       .partitionBy(col("bk")).orderBy(col("vec_id"))
     val index = banded
       .withColumn("brn", row_number().over(wB))
-      .filter(col("brn") <= cap)
+      .filter(col("brn") <= CAND_CAP)
       .select(col("bk"), col("vec_id").as("id_b"))
     banded.select(col("bk"), col("vec_id").as("id_a"))
       .join(index, Seq("bk"))
@@ -127,17 +126,6 @@ object SimilarityQueries {
 
   private def lshCandidates(e: DataFrame): DataFrame =
     lshCandidatesRaw(e).distinct()
-
-  /** [[AbCosinePairs]]-only access to the raw candidate stream (the A/B
-    * reconstructs the pre-round-9 plan outside this object). */
-  private[queries] def lshCandidatesForAb(e: DataFrame): DataFrame =
-    lshCandidatesRaw(e)
-
-  /** [[AbCandCap]]-only: raw candidates at an arbitrary index-side cap
-    * (the recall-vs-cap curve that makes CAND_CAP a measured contract —
-    * round-10 verdict item 4). */
-  private[queries] def lshCandidatesRawAtCap(e: DataFrame, cap: Int): DataFrame =
-    lshCandidatesRaw(e, cap)
 
   /** Exact cosine re-rank of candidate pairs to top-K per id_a.
     *
@@ -155,7 +143,7 @@ object SimilarityQueries {
     * sessions (SCALE.md round 9). */
   private val RerankBroadcastCap = 250000L
 
-  private[queries] def rerankTopK(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
+  private def rerankTopK(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val bc: DataFrame => DataFrame =
       if (embCount(s, d) <= RerankBroadcastCap) broadcast else identity
@@ -171,49 +159,6 @@ object SimilarityQueries {
       .select(col("id_a"), col("rn"), col("id_b"), col("cos"))
       .orderBy(col("id_a"), col("rn"))
   }
-
-  /** [[rerankTopK]] over a DUP-CARRYING candidate stream — built for
-    * round-10 verdict item 4 and then MEASUREMENT REJECTED for
-    * q_lsh_ann (kept only as [[AbLshAnn]]'s B form). The idea:
-    * `dense_rank` in place of `row_number` makes duplicate pairs share
-    * a rank — the ordering key (cos DESC, id_b) is unique per DISTINCT
-    * pair — and a distinct over the already-rank-filtered output
-    * absorbs them, so the kept set is IDENTICAL to
-    * `rerankTopK(s, d, cand.distinct())` while the full-frame
-    * candidate-distinct exchange disappears (dense_rank is rank-like,
-    * so InferWindowGroupLimit partial-limits the rank window's
-    * exchange map-side). The measurement (AbLshAnn, 100× dup-saturated
-    * replica, 3 alternating same-JVM reps): raw 129.5/47.5/62.5 vs
-    * distinct 86.3/39.6/37.3 — the distinct form wins EVERY rep and
-    * best-of by ~21%, because on a dup-saturated corpus (duplication ≈
-    * LSH_TABLES) the raw form pushes 4× rows through the 64-dim cosine
-    * and the rank sort, and that CPU exceeds the one exchange the
-    * distinct pays. Hash-equivalence of the two forms was pinned at
-    * sf0.01 + 10× before the A/B. */
-  private def rerankTopKRaw(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val bc: DataFrame => DataFrame =
-      if (embCount(s, d) <= RerankBroadcastCap) broadcast else identity
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id_a"))
-      .orderBy(col("cos").desc, col("id_b"))
-    cand
-      .join(bc(emb.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))), Seq("id_a"))
-      .join(bc(emb.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))), Seq("id_b"))
-      .withColumn("cos", round(cosine(col("emb_a"), col("emb_b")), 6))
-      .withColumn("rn", dense_rank().over(w))
-      .filter(col("rn") <= K)
-      .select(col("id_a"), col("rn"), col("id_b"), col("cos"))
-      .distinct()
-      .orderBy(col("id_a"), col("rn"))
-  }
-
-  /** [[AbLshAnn]]-only access to both rerank forms over the same
-    * candidate recipe. */
-  private[queries] def lshAnnFormsForAb(s: SparkSession, d: String)
-      : Seq[(String, () => DataFrame)] = Seq(
-    "raw" -> (() => rerankTopKRaw(s, d, lshCandidatesRaw(Tables.embeddings(s, d)))),
-    "distinct" -> (() => rerankTopK(s, d, lshCandidates(Tables.embeddings(s, d)))))
 
   /** Test-only FULL brute-force top-k (unbounded O(n²) all-pairs): the
     * exact recall reference for the ANN queries (QueryLibrarySpec). Not
@@ -462,7 +407,7 @@ object SimilarityQueries {
         if (embCount(s, d) <= RerankBroadcastCap) broadcast else identity
       // Raw (dup-carrying) candidates with the distinct AFTER the
       // ≥0.85 verify (the q_embed_dedup treatment, promoted here by
-      // the round-13 AbCosinePairs A/B at 100×: late 23.3/41.8/44.6 s
+      // the round-13 A/B added in 8fbf857, at 100×: late 23.3/41.8/44.6 s
       // vs the distinct-first form's 120.7/171.3/260.7 s, same row
       // counts, every rep) — the one full-frame exchange used to carry
       // ~10⁸ candidate id pairs into the distinct; now only the
@@ -569,7 +514,11 @@ object SimilarityQueries {
     // them. Multi-table is the standard recall lever: P(candidate) =
     // 1-(1-p^bits)^tables vs p^bits for one wide table. Compared against
     // bruteForceTopK in the ScalaTest recall test; oracle-checked for
-    // parity here.
+    // parity here. The distinct-first candidates stay: a dup-carrying
+    // dense_rank rerank (same kept set, no candidate distinct) lost
+    // every rep of the 100× dup-saturated A/B added in 2152177 (raw
+    // 129.5/47.5/62.5 s vs distinct 86.3/39.6/37.3 s) — it pushes ≈
+    // LSH_TABLES× rows through the cosine and the rank sort.
     "q_lsh_ann" -> ((s, d) =>
       rerankTopK(s, d, lshCandidates(Tables.embeddings(s, d)))),
 
@@ -716,7 +665,7 @@ object SimilarityQueries {
 
   /** SemDeDup per-cluster earlier-member cap and cosine threshold. */
   private[queries] val SEM_CAP = 128
-  private[queries] val SEM_TAU = 0.5
+  private val SEM_TAU = 0.5
 
   /** DOUBLE[] casts are load-bearing: DuckDB's list_cosine_similarity on
     * FLOAT[] computes (and returns) float32, which diverges from Spark's
@@ -743,12 +692,12 @@ object SimilarityQueries {
     * length at √n; the cap bounds the worst case either way. Mirrored in
     * the DuckDB twin; at the sf0.01 gate lists are ~31 long, so the cap
     * does not trigger and parity is unconditional. */
-  private[queries] val IVF_CAP = 128
+  private val IVF_CAP = 128
 
   /** Hash-seeded coarse quantizer scoring, shared by [[ivfAnn]] and the
     * centroid-update query: every vector scored against the broadcast
     * seed centroids, `crn` ranking nearest-first. */
-  private[queries] def seededScored(s: SparkSession, d: String, nCent: Int): DataFrame = {
+  private def seededScored(s: SparkSession, d: String, nCent: Int): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val cents = emb
       .withColumn("h", graft.functions.GraftFunctions.portable_hash60(

@@ -70,7 +70,7 @@ object TextQueries {
     * re-grows its lineage back to the corpus scan — 7 documents scans
     * for 3 rounds (ScanAudit round 10); iterative algorithms checkpoint
     * between rounds, and here once at the bounded root suffices. */
-  private[queries] def bpeMergeRounds(
+  private def bpeMergeRounds(
       s: SparkSession, d: String): Seq[DataFrame] = {
     val words = Tables.documents(s, d)
       .select(explode(filter(split(col("text"), " "), t => length(t) > 0)).as("w"))
@@ -98,7 +98,7 @@ object TextQueries {
       // re-deriving the whole training round inside their own lineage
       // (without this, q_bpe_encode's plan re-embedded the round-1 pair
       // aggregate SEVEN times across the top2/top3/apply chains —
-      // 11 exchanges vs 4, and AbLmScore's interleaved 10× A/B has the
+      // 11 exchanges vs 4, and e5d4914's interleaved 10× A/B has the
       // checkpointed form faster in every rep, best-of 6.4 vs 9.2 s).
       val top = pairs.orderBy(col("n").desc, col("pa"), col("pb")).limit(1)
         .select(col("pa"), col("pb"), col("n"), lit(r).as("round"))
@@ -415,7 +415,7 @@ object TextQueries {
       // Attach the estimator at c12-TABLE grain (c12 ⋈ c1 on w1, both
       // count tables), so the corpus-mass doc-grain frame joins ONCE on
       // the bigram key — the naive dbg⋈c12⋈c1 form re-shuffles the
-      // doc-grain rows a second time on w1. AbLmScore (same-JVM,
+      // doc-grain rows a second time on w1. The e5d4914 A/B (same-JVM,
       // interleaved, 10×): this form wins 6/8 reps, rep-mean −19%,
       // best-of tie — kept on the structural argument (the re-shuffled
       // frame is the count table, 10× smaller than dbg on the

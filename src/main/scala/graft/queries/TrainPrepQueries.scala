@@ -168,7 +168,7 @@ object TrainPrepQueries {
     // the bucket tables (≤ 4096 rows) and the 1-row totals reduce from
     // it; the estimator attaches at BUCKET grain so the doc-grain rows
     // shuffle once on the bucket key — the exact q_doc_lm_score
-    // join-shape argument (AbLmScore), with a 4096-row bound instead
+    // join-shape argument (A/B added in e5d4914), with a 4096-row bound instead
     // of vocab². At 100 TB the bucket table is a broadcast constant.
     "q_dsir_weights" -> ((s, d) => {
       val B = 4096L

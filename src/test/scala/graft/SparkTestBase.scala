@@ -10,15 +10,9 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
+  /** The production session shape (GraftSession), pinned to 8 cores. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.build(8)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

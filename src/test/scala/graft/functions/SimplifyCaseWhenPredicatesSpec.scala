@@ -89,29 +89,10 @@ class SimplifyCaseWhenPredicatesSpec extends SparkTestBase {
     assert(xs(q) === Seq(Some(7.0)))
     // the subquery-side scan must carry the rewritten base-column
     // predicate (sparkPlan, not executedPlan: AQE's adaptive wrapper
-    // hides the tree from collect — the PruneAudit lesson)
+    // hides the tree from collect — the PlanAudit lesson)
     val pushed = q.queryExecution.sparkPlan.collectWithSubqueries {
       case f: FileSourceScanExec => f.metadata.getOrElse("PushedFilters", "[]")
     }.mkString
     assert(pushed.contains("GreaterThan(x,5.0)"), s"not pushed in subquery: $pushed")
-  }
-
-  test("mode conf: off keeps the CASE in the filter; blanket rows ≡ pruned rows") {
-    val mode = SimplifyCaseWhenPredicates.ModeConf
-    try {
-      spark.conf.set(mode, "off")
-      val qOff = df.filter(col("cw").isNotNull)
-      assert(xs(qOff) === Seq(Some(3.0), Some(7.0)))
-      val filtersOff = qOff.queryExecution.optimizedPlan.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-      assert(filtersOff.exists(_.collectFirst {
-        case cw: org.apache.spark.sql.catalyst.expressions.CaseWhen => cw
-      }.isDefined), "off mode must leave the CASE in place")
-      spark.conf.set(mode, "blanket")
-      assert(xs(df.filter(col("cw") > 5)) === Seq(Some(7.0)))
-      assert(xs(df.filter(!(col("cw") <=> 3.0))) ===
-        Seq(None, Some(-2.0), Some(0.0), Some(7.0)))
-    } finally spark.conf.unset(mode)
   }
 }

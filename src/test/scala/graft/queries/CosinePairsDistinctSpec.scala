@@ -33,7 +33,7 @@ class CosinePairsDistinctSpec extends SparkTestBase {
     }
     val e = rows.toDF("vec_id", "embedding", "label")
       .withColumn("embedding", col("embedding").cast("array<float>"))
-    val raw = SimilarityQueries.lshCandidatesRawAtCap(e, 64)
+    val raw = SimilarityQueries.lshCandidatesRaw(e)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
     // candidate duplication must actually occur, or the test is vacuous

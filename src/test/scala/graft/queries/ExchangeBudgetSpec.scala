@@ -145,6 +145,8 @@ class ExchangeBudgetSpec extends SparkTestBase {
         "left-join exchange + output sort; merge training lives behind " +
         "the 1-row top checkpoints and the vocab-side token-count join " +
         "rides the broadcast"),
+    // AbLmScore: the join-shape A/B main added in e5d4914, since deleted;
+    // the wording stays because it is part of the test's name
     ("q_doc_lm_score", 8,
       "c12 + c1 reductions over the checkpointed (doc, bigram) table, " +
         "the w1-keyed c12⋈c1 estimator join + its (w1,w2) re-shuffle " +

@@ -25,12 +25,24 @@ for spec in $(grep -rhoE '\b[A-Z][A-Za-z0-9]*Spec\b' src/main | sort -u); do
   fi
 done
 [ "$MISSING" -eq 0 ] || exit 1
+# One session factory: every main builds through graft.GraftSession.
+BUILDERS=$(grep -rln 'SparkSession\.builder' src/main | grep -v '/GraftSession\.scala$' || true)
+if [ -n "$BUILDERS" ]; then
+  echo "PREGATE FAIL: SparkSession.builder outside GraftSession.scala:"
+  echo "$BUILDERS"
+  exit 1
+fi
+# Failures are loud: no catch of Throwable (use scala.util.control.NonFatal).
+if grep -rnE 'case +[A-Za-z_]+ *: *(java\.lang\.)?Throwable\b' src/main; then
+  echo "PREGATE FAIL: src/main catches Throwable (use NonFatal)"
+  exit 1
+fi
 sbt -batch compile
 sbt -batch test
-# Plan-shape regression gate (round 11): the ScanAudit/PruneAudit/
-# CodegenAudit dispositions, re-adjudicated against the committed
-# expected file — a new duplicate scan / unpushed filter / sort-agg
-# fallback fails the commit instead of silently eroding the sweep.
+# Plan-shape regression gate (round 11): PlanAudit's scans / prune /
+# codegen dispositions, re-adjudicated against the committed expected
+# file — a new duplicate scan / unpushed filter / sort-agg fallback
+# fails the commit instead of silently eroding the sweep.
 sbt -batch "runMain graft.queries.PlanAudit" | grep "plan-audit"
 sbt -batch "runMain graft.Verify /root/testdata/sf$SF $OUT"
 python3 tools/check_oracle.py "/root/testdata/sf$SF" "$OUT" | tail -3
